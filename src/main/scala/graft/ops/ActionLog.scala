@@ -504,10 +504,9 @@ object ActionLog {
             require(!statless,
               s"ActionLog($dir): staged file $f carries no footer " +
                 s"statistics for '$c' — the writer must record them")
-            require(r.getRecordCount == 0L || nonNull,
-              s"ActionLog($dir): stats column '$c' is entirely NULL in " +
-                s"staged file $f — a NULL band cannot support range pruning")
-            (r.getRecordCount, (lo, hi))
+            // an all-NULL band is a legal write with no range to record:
+            // its add carries no stats, and scans admit it conservatively
+            (r.getRecordCount, Option.when(nonNull)((lo, hi)))
           } finally r.close()
           if (rows == 0L) {
             // An empty write task's file (layouts with explicit
@@ -517,8 +516,11 @@ object ActionLog {
             // rebalance) relies on.
             fs.delete(p, false)
             None
-          } else
-            Some(s"""{"a":"add","p":"$f","lo":${st._1},"hi":${st._2},"n":$rows}""")
+          } else st match {
+            case Some((lo, hi)) =>
+              Some(s"""{"a":"add","p":"$f","lo":$lo,"hi":$hi,"n":$rows}""")
+            case None => Some(s"""{"a":"add","p":"$f"}""")
+          }
         }.flatten
     }
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
@@ -180,11 +180,11 @@ object ChangeFeed {
     }
   }
 
-  /** Write `df` as the next version WITH change capture: stage the full
+  /** Write `df` as the next version WITH change capture: write the full
     * snapshot, diff it against the live version, persist the changes inside
-    * the staged dir, then publish. Uses the staged (immutable, materialized)
-    * copy for the diff so `df` may lazily read the live version. Returns the
-    * new version number.
+    * the new version dir, then flip. Uses the written (immutable,
+    * materialized) copy for the diff so `df` may lazily read the live
+    * version. Returns the new version number.
     */
   def commit(df: DataFrame, dir: String, keyCols: Seq[String],
       txn: Map[String, Long] = Map.empty): Long = {
@@ -192,12 +192,11 @@ object ChangeFeed {
     recordKeys(spark, dir, keyCols)
     val cur = VersionedTable.currentVersion(spark, dir)
     val old = cur.map(v => VersionedTable.readVersion(spark, dir, v))
-    val next = VersionedTable.stage(df, dir)
-    val staged = spark.read.parquet(VersionedTable.stagedDir(dir, next))
-    diff(old, staged, keyCols)
-      .write.mode(SaveMode.Overwrite).parquet(cdfDir(dir, next).toString)
-    VersionedTable.publish(spark, dir, next, txn)
-    next
+    VersionedTable.commit(spark, dir, txn) { vd =>
+      VersionedTable.writeParquet(df)(vd)
+      VersionedTable.writeParquet(diff(old, spark.read.parquet(vd.toString), keyCols))(
+        new Path(vd, CdfDirName))
+    }._1
   }
 
   /** Exactly-once streaming commit WITH change capture (the Delta `txn`

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** SHALLOW CLONE — Delta's public zero-copy clone design on the `_v-N`
   * layout: the clone's first version is METADATA ONLY, a `_clone_src`
@@ -35,14 +34,10 @@ object Clone {
       s"Clone.shallow: source $srcDir version $srcVersion is missing or incomplete")
     require(VersionedTable.currentVersion(spark, dstDir).isEmpty,
       s"Clone.shallow: destination $dstDir already exists")
-    val vd = VersionedTable.verDir(dstDir, 1L)
-    fs.mkdirs(vd)
-    val out = fs.create(new Path(vd, CloneSrcName), true)
-    try out.write(srcVd.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    fs.create(new Path(vd, "_SUCCESS"), true).close()
-    VersionedTable.stampCommitTs(fs, dstDir, 1L)
-    VersionedTable.flipPointer(fs, dstDir, 1L)
+    VersionedTable.commit(spark, dstDir, plantSuccess = true) { vd =>
+      VersionedTable.writeText(fs, new Path(vd, CloneSrcName), srcVd.toString)
+    }
+    ()
   }
 
   /** The source version dir a cloned version references, if it is a

@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** Column mapping — Delta's public rename/drop schema-evolution design on
   * the `_v-N` layout: every logical column owns a STABLE integer id; data
@@ -59,9 +58,8 @@ object ColumnMapping {
       s"column mapping: field id beyond the high-water mark $maxId: $fields")
     fields.foreach(f => require(!f.name.contains("=") && !f.name.contains("\n"),
       s"column mapping: illegal character in name '${f.name}'"))
-    val out = fs.create(new Path(vd, SchemaName), true)
-    try out.write((s"#max=$maxId" +: fields.map(f => s"${f.id}=${f.name}"))
-      .mkString("\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
+    VersionedTable.writeText(fs, new Path(vd, SchemaName),
+      (s"#max=$maxId" +: fields.map(f => s"${f.id}=${f.name}")).mkString("\n"))
   }
 
   /** The version's manifest, in column order. Fails loudly on a version
@@ -104,8 +102,8 @@ object ColumnMapping {
   }
 
   /** Commit a data version: assign ids (existing names keep theirs, new
-    * names mint fresh ones), write the files under physical names, stage
-    * the manifest inside the staged dir, publish. `captureKeys` persists
+    * names mint fresh ones), write the files under physical names and the
+    * manifest beside them, one kernel commit. `captureKeys` persists
     * the CDF diff — computed over PHYSICAL frames projected to the new
     * manifest's ids, so capture composes with renames (id-stable) and
     * drops (dead ids leave the diff). Returns the new version.
@@ -126,28 +124,26 @@ object ColumnMapping {
       }
     }
     val phys = df.select(fields.map(f => col(f.name).as(physical(f.id))): _*)
-    val next = VersionedTable.stage(phys, dir)
-    val vd = VersionedTable.verDir(dir, next)
-    captureKeys.foreach { keys =>
-      val keyIds = keys.map(k => fields.find(_.name == k).getOrElse(
-        sys.error(s"ColumnMapping.writeData: unknown key column '$k'")).id)
-      val oldPhys = cur.map { v =>
-        val dv = dataVersion(spark, dir, v)
-        val oldCols = spark.read
-          .parquet(VersionedTable.verDir(dir, dv).toString).columns.toSet
-        // project the old side to the NEW manifest's surviving ids: columns
-        // dropped from the manifest leave the logical table and the feed
-        spark.read.parquet(VersionedTable.verDir(dir, dv).toString)
-          .select(fields.map(f => physical(f.id)).filter(oldCols.contains)
-            .map(col): _*)
+    VersionedTable.commit(spark, dir) { vd =>
+      VersionedTable.writeParquet(phys)(vd)
+      captureKeys.foreach { keys =>
+        val keyIds = keys.map(k => fields.find(_.name == k).getOrElse(
+          sys.error(s"ColumnMapping.writeData: unknown key column '$k'")).id)
+        val oldPhys = cur.map { v =>
+          val dv = dataVersion(spark, dir, v)
+          val oldCols = spark.read
+            .parquet(VersionedTable.verDir(dir, dv).toString).columns.toSet
+          // project the old side to the NEW manifest's surviving ids: columns
+          // dropped from the manifest leave the logical table and the feed
+          spark.read.parquet(VersionedTable.verDir(dir, dv).toString)
+            .select(fields.map(f => physical(f.id)).filter(oldCols.contains)
+              .map(col): _*)
+        }
+        VersionedTable.writeParquet(ChangeFeed.diff(oldPhys,
+          spark.read.parquet(vd.toString), keyIds.map(physical)))(new Path(vd, "_cdf"))
       }
-      ChangeFeed.diff(oldPhys, spark.read.parquet(vd.toString),
-          keyIds.map(physical))
-        .write.mode(SaveMode.Overwrite).parquet(new Path(vd, "_cdf").toString)
-    }
-    writeManifest(fs, vd, fields, nextId)
-    VersionedTable.publish(spark, dir, next)
-    next
+      writeManifest(fs, vd, fields, nextId)
+    }._1
   }
 
   /** Column DEFAULTS by id as of `version` (Delta's default-values
@@ -193,29 +189,18 @@ object ColumnMapping {
     val fs = fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"ColumnMapping($dir): no complete snapshot"))
-    VersionedTable.listVersions(fs, dir).filter(_ > cur)
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    val next = cur + 1L
-    val vd = VersionedTable.verDir(dir, next)
-    fs.mkdirs(vd)
-    writeManifest(fs, vd, fields, maxId)
     // defaults carry forward across metadata commits, restricted to ids
     // still in the manifest
     val carried = (defaults(spark, dir, cur) ++ extraDefaults)
       .filter { case (id, _) => fields.exists(_.id == id) }
-    if (carried.nonEmpty) {
-      val out = fs.create(new Path(vd, DefaultsName), true)
-      try out.write(carried.toSeq.sortBy(_._1)
-        .map { case (id, d) => s"$id=$d" }.mkString("\n")
-        .getBytes(StandardCharsets.UTF_8)) finally out.close()
-    }
-    val out = fs.create(new Path(vd, DataFromName), true)
-    try out.write(dataVersion(spark, dir, cur).toString
-      .getBytes(StandardCharsets.UTF_8)) finally out.close()
-    fs.create(new Path(vd, "_SUCCESS"), true).close()
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
-    next
+    VersionedTable.commit(spark, dir, plantSuccess = true) { vd =>
+      writeManifest(fs, vd, fields, maxId)
+      if (carried.nonEmpty)
+        VersionedTable.writeText(fs, new Path(vd, DefaultsName), carried.toSeq
+          .sortBy(_._1).map { case (id, d) => s"$id=$d" }.mkString("\n"))
+      VersionedTable.writeText(fs, new Path(vd, DataFromName),
+        dataVersion(spark, dir, cur).toString)
+    }._1
   }
 
   /** RENAME COLUMN as a metadata-only commit: same id, new name. */
@@ -290,22 +275,8 @@ object ColumnMapping {
     * version references; torn dirs are swept outright. Returns the number
     * of versions deleted.
     */
-  def gc(spark: SparkSession, dir: String, keep: Int = 2): Int = {
-    require(keep >= 1, "gc must keep at least the live version")
-    val fs = fsOf(spark, dir)
-    VersionedTable.currentVersion(spark, dir) match {
-      case None => 0
-      case Some(live) =>
-        val (done, torn) = VersionedTable.listVersions(fs, dir)
-          .filter(_ <= live)
-          .partition(v => VersionedTable.complete(fs, VersionedTable.verDir(dir, v)))
-        val kept = done.takeRight(keep).toSet
-        val referenced = kept.map(v => dataVersion(spark, dir, v))
-        val victims = done.filterNot(v => kept(v) || referenced(v)) ++ torn
-        victims.foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-        victims.length
-    }
-  }
+  def gc(spark: SparkSession, dir: String, keep: Int = 2): Int =
+    VersionedTable.gcPinning(spark, dir, keep)(_.map(v => dataVersion(spark, dir, v)))
 
   /** `table_changes(from, to]` across renames and drops: each data
     * version's physical capture rendered under the END version's manifest

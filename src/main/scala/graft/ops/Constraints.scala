@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** Table-level CHECK constraints — Delta's public constraints design on
   * the `_v-N` layout: the constraint registry lives as a `_checks` file
@@ -92,9 +91,8 @@ object Constraints {
         s"write to $dir rejected: " +
           bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
     }
-    val out = fs.create(new Path(vd, ChecksName), true)
-    try out.write(all.map { case (n, e) => s"$n=$e" }.mkString("\n")
-      .getBytes(StandardCharsets.UTF_8)) finally out.close()
+    VersionedTable.writeText(fs, new Path(vd, ChecksName),
+      all.map { case (n, e) => s"$n=$e" }.mkString("\n"))
     VersionedTable.publish(spark, dir, next)
     next
   }

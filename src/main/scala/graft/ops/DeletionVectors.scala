@@ -225,19 +225,8 @@ object DeletionVectors {
     val stageName = "_stage-" + java.util.UUID.randomUUID().toString
     val vd = new Path(dir, stageName)
     fs.mkdirs(vd)
-    // data files carried as raw byte copies — never re-encoded; copies are
-    // independent per file, so a bounded pool keeps the carry flat in file
-    // count instead of serializing one full copy round-trip per file on
-    // the driver (the r18 verdict's #4 discipline)
-    val carrySrc = fs.listStatus(live)
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .toSeq
-    graft.ParallelActions.mapOrdered(carrySrc) { st =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-        new Path(vd, st.getPath.getName), false,
-        spark.sparkContext.hadoopConfiguration)
-    }
+    // data files carried as raw byte copies — never re-encoded
+    VersionedTable.carry(spark, VersionedTable.dataFiles(fs, live), vd)
     merged.write.mode(SaveMode.Overwrite)
       .parquet(new Path(vd, DvDirName).toString)
     writeBlobSidecar(spark, merged, new Path(vd, BlobDirName))
@@ -255,21 +244,18 @@ object DeletionVectors {
   /** Fold the vectors back into clean files: rewrite the DV-applied
     * content as the next version (no `_dv` sidecar), capturing an EMPTY
     * change set when `capture` — compaction is dataChange=false, logical
-    * content is untouched. The crash-safe swap is the ordinary
-    * stage-then-publish.
+    * content is untouched. The crash-safe swap is the ordinary kernel
+    * commit.
     */
   def compact(spark: SparkSession, dir: String, numFiles: Int,
       capture: Boolean = false): Long = {
     val content = read(spark, dir).repartition(numFiles)
-    val next = VersionedTable.stage(content, dir)
-    if (capture) {
-      val staged = spark.read.parquet(VersionedTable.stagedDir(dir, next))
+    VersionedTable.commit(spark, dir) { vd =>
+      VersionedTable.writeParquet(content)(vd)
       // schema-only empty frame: the logical diff of a pure rewrite
-      staged.filter(lit(false)).withColumn(ChangeFeed.ChangeType, lit(""))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(new Path(VersionedTable.verDir(dir, next), "_cdf").toString)
-    }
-    VersionedTable.publish(spark, dir, next)
-    next
+      if (capture)
+        VersionedTable.writeParquet(spark.read.parquet(vd.toString).filter(lit(false))
+          .withColumn(ChangeFeed.ChangeType, lit("")))(new Path(vd, "_cdf"))
+    }._1
   }
 }

@@ -168,30 +168,16 @@ object Layout {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"binPackVersioned($dir): no complete snapshot"))
-    val live = VersionedTable.verDir(dir, cur)
-    val files = fs.listStatus(live).toSeq.filter(st => st.isFile &&
-      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+    val files = VersionedTable.dataFiles(fs, VersionedTable.verDir(dir, cur))
     val (small, big) = files.partition(_.getLen < smallBytes)
     if (small.size < 2) return (cur, 0, files.size)
-    VersionedTable.listVersions(fs, dir).filter(_ > cur)
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    val next = cur + 1L
-    val vd = VersionedTable.verDir(dir, next)
     val want = math.max(1,
       math.ceil(small.map(_.getLen).sum.toDouble / smallBytes).toInt)
-    spark.read.parquet(small.map(_.getPath.toString): _*).coalesce(want)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(vd.toString)
-    // independent per-file carries — bounded-parallel, flat in file count
-    graft.ParallelActions.mapOrdered(big) { st =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-        new Path(vd, st.getPath.getName), false,
-        spark.sparkContext.hadoopConfiguration)
+    val (next, _) = VersionedTable.commit(spark, dir) { vd =>
+      VersionedTable.writeParquet(
+        spark.read.parquet(small.map(_.getPath.toString): _*).coalesce(want))(vd)
+      VersionedTable.carry(spark, big, vd)
     }
-    require(VersionedTable.complete(fs, vd),
-      s"binPackVersioned: staged $vd missing _SUCCESS")
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
-    spark.catalog.refreshByPath(vd.toString)
     (next, small.size, big.size)
   }
 }

@@ -15,17 +15,17 @@ import java.nio.charset.StandardCharsets
   * mutual-exclusion contract and Iceberg's CAS-on-pointer, folded onto the
   * `_v-NNNNNNNN` + `_ptr` layout.
   *
-  * Commit point: `_commit-NNNNNNNN` marker, created with
-  * `FileSystem.create(overwrite = false)` — atomic create-if-absent on HDFS;
-  * object stores supply it via conditional put (If-None-Match), exactly the
-  * LogStore contract Delta documents; on the local test filesystem it is an
-  * exists-check + O_EXCL create. The marker's CONTENT is the whole commit:
-  * the staged dir's name plus the declared write set. Everything after the
-  * marker (rename staged -> `_v-N`, pointer flip) is idempotent
-  * FINALIZATION that any later writer or reader rolls forward
-  * ([[finalizePending]]) — so a writer crashing at any instant after its
-  * marker lands loses no commit, and one crashing before it leaves only a
-  * uniquely-named staged dir for [[sweepStages]].
+  * Commit point: `_commit-NNNNNNNN` marker, published with [[AtomicPut]] —
+  * put-if-absent WITH its content in one atomic step (a hard link on the
+  * local filesystem, create-under-lease on HDFS, conditional put on object
+  * stores: the LogStore contract Delta documents), so no reader ever sees a
+  * claimed-but-empty marker. The marker's CONTENT is the whole commit: the
+  * staged dir's name plus the declared write set. Everything after the
+  * marker (rename staged -> `_v-N`, then [[VersionedTable]]'s txn carry,
+  * stamp and pointer flip) is idempotent FINALIZATION that any later writer
+  * or reader rolls forward ([[finalizePending]]) — so a writer crashing at
+  * any instant after its marker lands loses no commit, and one crashing
+  * before it leaves only a uniquely-named staged dir for [[sweepStages]].
   *
   * Conflict rule (Delta's logical-conflict check, simplified to declared
   * sets): each commit declares the partitions/keys it writes as a token set;
@@ -38,7 +38,7 @@ import java.nio.charset.StandardCharsets
   */
 object Occ {
 
-  private val CommitPrefix = "_commit-"
+  private[ops] val CommitPrefix = "_commit-"
   private val StagePrefix = "_stage-"
 
   /** Thrown when another writer committed an overlapping write set between
@@ -64,10 +64,8 @@ object Occ {
   private def listCommits(fs: org.apache.hadoop.fs.FileSystem, dir: String): Seq[Long] = {
     val d = new Path(dir)
     if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith(CommitPrefix))
-      .flatMap(st => st.getPath.getName.stripPrefix(CommitPrefix).toLongOption)
-      .sorted
+    else fs.listStatus(d).toSeq.filter(_.isFile)
+      .flatMap(st => VersionedTable.numbered(st.getPath, CommitPrefix)).sorted
   }
 
   /** Atomic claim of version `v`: put-if-absent of the commit marker WITH
@@ -82,14 +80,25 @@ object Occ {
     AtomicPut(fs, commitPath(dir, v), body.getBytes(StandardCharsets.UTF_8))
   }
 
-  /** Roll a claimed-but-unfinalized commit forward: rename its staged dir to
-    * the version dir (skip if already there) and advance the pointer. Safe
-    * to call from anyone at any time — every step is idempotent, which is
-    * what makes the marker the single commit point.
+  /** Roll every claimed-but-unfinalized commit forward: rename its staged
+    * dir to the version dir (skip if already there), then the
+    * [[VersionedTable]] kernel's carry → stamp → flip tail. Safe to call
+    * from anyone at any time — every step is idempotent, which is what
+    * makes the marker the single commit point.
+    *
+    * Only markers ABOVE the pointer are pending: one at or below it is
+    * final, and [[VersionedTable.gc]] may since have deleted its version
+    * dir. With no pointer (a first commit, or a crash mid-flip) the floor
+    * is the highest stamped version — stamping precedes the flip, so every
+    * version at or below it has already been rolled forward.
     */
   def finalizePending(spark: SparkSession, dir: String): Unit = {
     val fs = VersionedTable.fsOf(spark, dir)
-    listCommits(fs, dir).foreach { v =>
+    val floor = VersionedTable.readPtr(fs, dir)
+      .orElse(VersionedTable.listVersions(fs, dir).reverse
+        .find(v => VersionedTable.hasCommitTs(fs, dir, v)))
+      .getOrElse(0L)
+    listCommits(fs, dir).filter(_ > floor).foreach { v =>
       val vd = VersionedTable.verDir(dir, v)
       readMarker(fs, dir, v).foreach { case (stageName, _) =>
         val stage = new Path(dir, stageName)
@@ -101,14 +110,7 @@ object Occ {
         require(VersionedTable.complete(fs, vd),
           s"Occ.finalizePending($dir): commit $v has neither staged dir nor version dir")
       }
-      // stamp-if-absent is part of the idempotent roll-forward: a version
-      // must never go live unstamped or readAsOf refuses the whole history.
-      // Concurrent finalizers may both stamp; the clamp keeps either outcome
-      // monotonic, and version order = claim order so stamps stay ordered.
-      if (!VersionedTable.hasCommitTs(fs, dir, v))
-        VersionedTable.stampCommitTs(fs, dir, v)
-      if (!VersionedTable.readPtr(fs, dir).exists(_ >= v))
-        VersionedTable.flipPointer(fs, dir, v)
+      VersionedTable.rollForward(fs, dir, v)
     }
   }
 
@@ -136,43 +138,6 @@ object Occ {
     listCommits(fs, dir).filter(_ > base)
       .flatMap(v => readMarker(fs, dir, v).map(v -> _._2))
 
-  /** Commit `mutate(liveSnapshot)` under optimistic concurrency.
-    *
-    * `writeSet` declares what the transformation writes (partition values,
-    * key-range tokens, or `*` for whole-table). `mutate` receives the
-    * current live snapshot (None on a fresh table) and must return the FULL
-    * next snapshot (same whole-snapshot versioning as
-    * [[VersionedTable.write]]); it is re-run from scratch on every rebase,
-    * so it must be a pure function of its input. `hook` fires between staging and claiming — the window every
-    * interesting interleaving lives in; tests use it to race a second
-    * writer, production leaves it default.
-    *
-    * `captureKeys` composes CDF with OCC (the Delta rebase contract):
-    * when set, each ATTEMPT diffs its staged snapshot against the base it
-    * read and persists the changes under `stage/_cdf` BEFORE the claim —
-    * the capture rides the marker+rename commit point atomically, so a
-    * version is never live without its change files and a crashed
-    * finalization carries them through roll-forward. A rebased loser
-    * recomputes the capture against the WINNER's snapshot (the staged diff
-    * a Delta rebase re-derives), never ships the stale diff.
-    *
-    * `dataChange = false` declares a PURE REWRITE (compaction, clustering,
-    * DV folding): the logical content of the output equals its input, only
-    * the layout differs. This is Delta's public `dataChange=false` commit
-    * flag, and it relaxes the conflict rule in both directions — a rewrite
-    * candidate never hard-conflicts (its mutate is re-run on the winner's
-    * snapshot, which is always legal for a content-preserving function),
-    * and committed rewrites are transparent to later candidates (the
-    * content they read is still the content that is live). That is what
-    * lets OPTIMIZE run concurrently with appends instead of serializing a
-    * 100 TB table behind its own maintenance. The `#rewrite` marker token
-    * is reserved; `mutate` MUST be content-preserving when the flag is set
-    * — the protocol trusts the declaration, exactly as Delta does.
-    *
-    * @throws CommitConflictException when a commit since the read version
-    *         overlaps `writeSet` — the staged dir is deleted first, so a
-    *         loser leaves NO torn state.
-    */
   /** Commit a stage dir ALREADY WRITTEN by distributed executors (the
     * DSv2 batch-write path: tasks stream their partitions straight into
     * `dir/stageName`, no driver materialization, no second copy). The
@@ -210,6 +175,44 @@ object Occ {
     Committed(target, 0)
   }
 
+  /** Commit `mutate(liveSnapshot)` under optimistic concurrency.
+    *
+    * `writeSet` declares what the transformation writes (partition values,
+    * key-range tokens, or `*` for whole-table). `mutate` receives the
+    * current live snapshot (None on a fresh table) and must return the FULL
+    * next snapshot (same whole-snapshot versioning as
+    * [[VersionedTable.write]]); it is re-run from scratch on every rebase,
+    * so it must be a pure function of its input. `hook` fires between
+    * staging and claiming — the window every interesting interleaving
+    * lives in; tests use it to race a second writer, production leaves it
+    * default.
+    *
+    * `captureKeys` composes CDF with OCC (the Delta rebase contract):
+    * when set, each ATTEMPT diffs its staged snapshot against the base it
+    * read and persists the changes under `stage/_cdf` BEFORE the claim —
+    * the capture rides the marker+rename commit point atomically, so a
+    * version is never live without its change files and a crashed
+    * finalization carries them through roll-forward. A rebased loser
+    * recomputes the capture against the WINNER's snapshot (the staged diff
+    * a Delta rebase re-derives), never ships the stale diff.
+    *
+    * `dataChange = false` declares a PURE REWRITE (compaction, clustering,
+    * DV folding): the logical content of the output equals its input, only
+    * the layout differs. This is Delta's public `dataChange=false` commit
+    * flag, and it relaxes the conflict rule in both directions — a rewrite
+    * candidate never hard-conflicts (its mutate is re-run on the winner's
+    * snapshot, which is always legal for a content-preserving function),
+    * and committed rewrites are transparent to later candidates (the
+    * content they read is still the content that is live). That is what
+    * lets OPTIMIZE run concurrently with appends instead of serializing a
+    * 100 TB table behind its own maintenance. The `#rewrite` marker token
+    * is reserved; `mutate` MUST be content-preserving when the flag is set
+    * — the protocol trusts the declaration, exactly as Delta does.
+    *
+    * @throws CommitConflictException when a commit since the read version
+    *         overlaps `writeSet` — the staged dir is deleted first, so a
+    *         loser leaves NO torn state.
+    */
   def commit(spark: SparkSession, dir: String, writeSet: Set[String],
       captureKeys: Option[Seq[String]] = None, dataChange: Boolean = true,
       captureAppend: Option[DataFrame] = None,

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** Partition-spec evolution — Iceberg's public design on the `_v-N` layout:
   * the partition layout is VERSIONED METADATA, not a property of the data.
@@ -63,9 +62,8 @@ object PartitionEvolution {
 
   private def writeSpecs(fs: org.apache.hadoop.fs.FileSystem, vd: Path,
       specs: Seq[Spec], active: Int): Unit = {
-    val out = fs.create(new Path(vd, SpecName), true)
-    try out.write((s"#active=$active" +: specs.map(fmt))
-      .mkString("\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
+    VersionedTable.writeText(fs, new Path(vd, SpecName),
+      (s"#active=$active" +: specs.map(fmt)).mkString("\n"))
   }
 
   /** (all specs ever, active spec id) as of `version`. */
@@ -94,61 +92,39 @@ object PartitionEvolution {
     case Bucket(c, n) => pmod(hash(col(c)), lit(n))
   }
 
-  /** Commit a data version: write `df`'s files under `spec` into the staged
-    * dir's own epoch, chain to the previous data version, publish.
+  /** One version of this plane through the commit kernel: `data` (if any)
+    * written under `data/` partitioned by the ACTIVE spec, the spec list,
+    * and the `_prev` link to the live version (if any). The version root
+    * holds no parquet, so the kernel plants `_SUCCESS`.
     */
-  private def commitData(df: DataFrame, dir: String, specs: Seq[Spec],
-      active: Int): Long = {
-    val spark = df.sparkSession
+  private def commitVersion(spark: SparkSession, dir: String,
+      data: Option[DataFrame], specs: Seq[Spec], active: Int): Long = {
     val fs = fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir)
-    VersionedTable.listVersions(fs, dir).filter(_ > cur.getOrElse(-1L))
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    val next = cur.getOrElse(0L) + 1L
-    val vd = VersionedTable.verDir(dir, next)
     val spec = specs.find(_.id == active).getOrElse(
       sys.error(s"PartitionEvolution($dir): active spec $active not declared"))
-    df.withColumn("p", pExpr(spec.t))
-      .write.mode(SaveMode.Overwrite).partitionBy("p")
-      .parquet(new Path(vd, DataName).toString)
-    writeSpecs(fs, vd, specs, active)
-    cur.foreach { v =>
-      val out = fs.create(new Path(vd, PrevName), true)
-      try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    fs.create(new Path(vd, "_SUCCESS"), true).close()
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
-    next
+    VersionedTable.commit(spark, dir, plantSuccess = true) { vd =>
+      data.foreach(_.withColumn("p", pExpr(spec.t))
+        .write.mode(SaveMode.Overwrite).partitionBy("p")
+        .parquet(new Path(vd, DataName).toString))
+      writeSpecs(fs, vd, specs, active)
+      cur.foreach(v => VersionedTable.writeText(fs, new Path(vd, PrevName), v.toString))
+    }._1
   }
 
   /** Bootstrap under the first spec. */
   def init(df: DataFrame, dir: String, t: Transform): Long =
-    commitData(df, dir, Seq(Spec(1, t)), 1)
+    commitVersion(df.sparkSession, dir, Some(df), Seq(Spec(1, t)), 1)
 
   /** Change the active spec — METADATA-ONLY: the new version holds the spec
     * list and the chain pointer, zero data bytes. Spec ids only grow.
     */
   def evolve(spark: SparkSession, dir: String, t: Transform): Long = {
-    val fs = fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"PartitionEvolution.evolve($dir): no complete snapshot"))
     val (specs, _) = specsOf(spark, dir, cur)
-    VersionedTable.listVersions(fs, dir).filter(_ > cur)
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    val next = cur + 1L
-    val vd = VersionedTable.verDir(dir, next)
-    fs.mkdirs(vd)
     val newSpec = Spec(specs.map(_.id).max + 1, t)
-    writeSpecs(fs, vd, specs :+ newSpec, newSpec.id)
-    val out = fs.create(new Path(vd, PrevName), true)
-    try out.write(cur.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    fs.create(new Path(vd, "_SUCCESS"), true).close()
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
-    next
+    commitVersion(spark, dir, data = None, specs :+ newSpec, newSpec.id)
   }
 
   /** Append rows under the ACTIVE spec (new files only; older epochs are
@@ -158,7 +134,7 @@ object PartitionEvolution {
     val cur = VersionedTable.currentVersion(df.sparkSession, dir).getOrElse(
       sys.error(s"PartitionEvolution.append($dir): no complete snapshot"))
     val (specs, active) = specsOf(df.sparkSession, dir, cur)
-    commitData(df, dir, specs, active)
+    commitVersion(df.sparkSession, dir, Some(df), specs, active)
   }
 
   /** The chain of data-bearing versions for `version`, oldest first, each

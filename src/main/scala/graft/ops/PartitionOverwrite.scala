@@ -27,20 +27,13 @@ object PartitionOverwrite {
 
   final class ReplaceWhereViolation(msg: String) extends RuntimeException(msg)
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Bootstrap the partitioned table (version 1). */
   def init(df: DataFrame, dir: String, partCol: String): Long = {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
-    val cur = VersionedTable.currentVersion(spark, dir)
-    require(cur.isEmpty, s"PartitionOverwrite.init($dir): table exists")
-    val vd = VersionedTable.verDir(dir, 1L)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(vd.toString)
-    VersionedTable.stampCommitTs(fs, dir, 1L)
-    VersionedTable.flipPointer(fs, dir, 1L)
-    1L
+    require(VersionedTable.currentVersion(df.sparkSession, dir).isEmpty,
+      s"PartitionOverwrite.init($dir): table exists")
+    VersionedTable.commit(df.sparkSession, dir) { vd =>
+      df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(vd.toString)
+    }._1
   }
 
   /** Replace exactly the partitions present in `df`; carry the rest.
@@ -49,7 +42,7 @@ object PartitionOverwrite {
   def overwrite(df: DataFrame, dir: String, partCol: String,
       expect: Option[Column] = None): (Long, Seq[String], Int) = {
     val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
+    val fs = VersionedTable.fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"PartitionOverwrite.overwrite($dir): no complete snapshot"))
     expect.foreach { e =>
@@ -60,34 +53,20 @@ object PartitionOverwrite {
     }
     val incoming = df.select(col(partCol).cast("string")).distinct()
       .collect().map(_.getString(0)).toSet // bounded by the partition count
-    val live = VersionedTable.verDir(dir, cur)
-    VersionedTable.listVersions(fs, dir).filter(_ > cur)
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    val next = cur + 1L
-    val vd = VersionedTable.verDir(dir, next)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(vd.toString)
-    val replaced = fs.listStatus(vd).toSeq
+    def partDirs(vd: Path) = fs.listStatus(vd).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
-      .map(_.getPath.getName)
-    require(replaced.map(_.stripPrefix(s"$partCol=")).toSet == incoming,
-      s"PartitionOverwrite: written dirs $replaced != incoming $incoming")
-    // carry untouched partition dirs as raw copies (metadata adds in a
-    // log-based format; dir-level copies on plain directories)
-    val carried = fs.listStatus(live).toSeq.filter(st => st.isDirectory &&
-      st.getPath.getName.startsWith(s"$partCol=") &&
-      !replaced.contains(st.getPath.getName))
-    // independent per-dir carries — bounded-parallel, flat in dir count
-    graft.ParallelActions.mapOrdered(carried) { st =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-        new Path(vd, st.getPath.getName), false,
-        spark.sparkContext.hadoopConfiguration)
+    val (next, (replaced, carried)) = VersionedTable.commit(spark, dir) { vd =>
+      df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(vd.toString)
+      val replaced = partDirs(vd).map(_.getPath.getName)
+      require(replaced.map(_.stripPrefix(s"$partCol=")).toSet == incoming,
+        s"PartitionOverwrite: written dirs $replaced != incoming $incoming")
+      // carry the untouched partition dirs whole
+      val carried = partDirs(VersionedTable.verDir(dir, cur))
+        .filterNot(st => replaced.contains(st.getPath.getName))
+      VersionedTable.carry(spark, carried, vd)
+      (replaced, carried.size)
     }
-    require(VersionedTable.complete(fs, vd),
-      s"PartitionOverwrite: staged $vd missing _SUCCESS")
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
-    spark.catalog.refreshByPath(vd.toString)
-    (next, replaced.sorted, carried.size)
+    (next, replaced.sorted, carried)
   }
 
   /** Read the live snapshot (partition column rediscovered from dirs). */

@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.Path
@@ -66,14 +65,12 @@ object Protocol {
           s"the live version's features (${prev.readerFeatures} / " +
           s"${prev.writerFeatures})")
     }
-    val next = VersionedTable.stage(df, dir)
-    val vd = VersionedTable.verDir(dir, next)
-    val out = fs.create(new Path(vd, FileName), true)
-    try out.write((proto.readerFeatures.toSeq.sorted.map("rf=" + _) ++
-      proto.writerFeatures.toSeq.sorted.map("wf=" + _))
-      .mkString("\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
-    VersionedTable.publish(spark, dir, next)
-    next
+    VersionedTable.commit(spark, dir) { vd =>
+      VersionedTable.writeParquet(df)(vd)
+      VersionedTable.writeText(fs, new Path(vd, FileName),
+        (proto.readerFeatures.toSeq.sorted.map("rf=" + _) ++
+          proto.writerFeatures.toSeq.sorted.map("wf=" + _)).mkString("\n"))
+    }._1
   }
 
   /** Gate a READ: fail loudly if the live version requires a reader

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** Row tracking — Delta's public row-ID design re-expressed on the `_v-N`
   * snapshot layout: every row owns a STABLE long `_row_id`, minted once from
@@ -59,21 +58,17 @@ object RowTracking {
         s"$HwmName — not a row-tracked table?"))
   }
 
-  /** Stage `df` (which must carry [[RowId]]), plant the hwm sidecar inside
-    * the staged dir, publish. A crash between stage and publish leaves the
-    * live version untouched and the next write sweeps the orphan.
+  /** Commit `df` (which must carry [[RowId]]) with the hwm sidecar inside
+    * the new version dir. A crash before the flip leaves the live version
+    * untouched and the next write sweeps the orphan.
     */
   private def commitTracked(df: DataFrame, dir: String, hwm: Long): Long = {
     val spark = df.sparkSession
     require(df.columns.contains(RowId), s"commitTracked: frame lacks $RowId")
-    val next = VersionedTable.stage(df, dir)
-    val fs = fsOf(spark, dir)
-    val out = fs.create(
-      new Path(VersionedTable.verDir(dir, next), HwmName), true)
-    try out.write(hwm.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    VersionedTable.publish(spark, dir, next)
-    next
+    VersionedTable.commit(spark, dir) { vd =>
+      VersionedTable.writeParquet(df)(vd)
+      VersionedTable.writeText(fsOf(spark, dir), new Path(vd, HwmName), hwm.toString)
+    }._1
   }
 
   /** Bootstrap a tracked table: every row minted fresh (ids 1..n in

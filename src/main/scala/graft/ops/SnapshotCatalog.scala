@@ -31,7 +31,6 @@ import java.nio.charset.StandardCharsets
   */
 object SnapshotCatalog {
 
-  private val PtrName = "_ptr"
   private val ManifestPrefix = "_m-"
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
@@ -40,22 +39,8 @@ object SnapshotCatalog {
   private def manifestPath(catDir: String, n: Long): Path =
     new Path(catDir, f"$ManifestPrefix$n%08d")
 
-  /** Read-to-EOF loop (the VersionedTable.readText rule): object-store
-    * filesystems may legally return short reads, and a truncated manifest
-    * must not half-parse.
-    */
-  private def readText(fs: FileSystem, p: Path): Option[String] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream(256)
-        val chunk = new Array[Byte](256)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(new String(buf.toByteArray, StandardCharsets.UTF_8).trim)
-      } finally in.close()
-    }
+  private def readManifest(fs: FileSystem, catDir: String, n: Long): Option[String] =
+    VersionedTable.readText(fs, manifestPath(catDir, n))
 
   private def listManifests(fs: FileSystem, catDir: String): Seq[Long] =
     if (!fs.exists(new Path(catDir))) Nil
@@ -81,11 +66,10 @@ object SnapshotCatalog {
   /** The live catalog state: (manifest number, table -> pinned version). */
   def current(spark: SparkSession, catDir: String): Option[(Long, Map[String, Long])] = {
     val fs = fsOf(spark, catDir)
-    val ptr = readText(fs, new Path(catDir, PtrName)).flatMap(_.toLongOption)
-    val candidate = ptr.filter(n => fs.exists(manifestPath(catDir, n)))
+    val candidate = VersionedTable.readPtr(fs, catDir)
+      .filter(n => fs.exists(manifestPath(catDir, n)))
       .orElse(listManifests(fs, catDir).lastOption)
-    candidate.flatMap(n =>
-      readText(fs, manifestPath(catDir, n)).map(t => n -> parse(t)))
+    candidate.flatMap(n => readManifest(fs, catDir, n).map(t => n -> parse(t)))
   }
 
   /** Atomically commit a new table->version mapping. The pins should name
@@ -103,16 +87,9 @@ object SnapshotCatalog {
     listManifests(fs, catDir).filter(n => n > cur.getOrElse(-1L))
       .foreach(n => fs.delete(manifestPath(catDir, n), false))
     val next = cur.getOrElse(0L) + 1L
-    val body = pins.toSeq.sortBy(_._1).map { case (t, v) => s"$t=$v" }.mkString("\n")
-    val out = fs.create(manifestPath(catDir, next), true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    val ptr = new Path(catDir, PtrName)
-    val tmp = new Path(catDir, s".$PtrName.tmp-${java.util.UUID.randomUUID()}")
-    val o2 = fs.create(tmp, true)
-    try o2.write(next.toString.getBytes(StandardCharsets.UTF_8)) finally o2.close()
-    if (fs.exists(ptr)) fs.delete(ptr, false)
-    if (!fs.rename(tmp, ptr))
-      throw new java.io.IOException(s"catalog pointer flip failed: $tmp -> $ptr")
+    VersionedTable.writeText(fs, manifestPath(catDir, next),
+      pins.toSeq.sortBy(_._1).map { case (t, v) => s"$t=$v" }.mkString("\n"))
+    VersionedTable.flipPointer(fs, catDir, next)
     next
   }
 
@@ -130,19 +107,9 @@ object SnapshotCatalog {
   def finalizePending(spark: SparkSession, catDir: String): Unit = {
     val fs = fsOf(spark, catDir)
     listManifests(fs, catDir).lastOption.foreach { top =>
-      val cur = readText(fs, new Path(catDir, PtrName)).flatMap(_.toLongOption)
-      if (!cur.exists(_ >= top)) flipPtr(fs, catDir, top)
+      if (!VersionedTable.readPtr(fs, catDir).exists(_ >= top))
+        VersionedTable.flipPointer(fs, catDir, top)
     }
-  }
-
-  private def flipPtr(fs: FileSystem, catDir: String, n: Long): Unit = {
-    val ptr = new Path(catDir, PtrName)
-    val tmp = new Path(catDir, s".$PtrName.tmp-${java.util.UUID.randomUUID()}")
-    val o = fs.create(tmp, true)
-    try o.write(n.toString.getBytes(StandardCharsets.UTF_8)) finally o.close()
-    if (fs.exists(ptr)) fs.delete(ptr, false)
-    if (!fs.rename(tmp, ptr))
-      throw new java.io.IOException(s"catalog pointer flip failed: $tmp -> $ptr")
   }
 
   /** Catalog-level optimistic concurrency — [[Occ]]'s claim/rebase protocol
@@ -183,7 +150,7 @@ object SnapshotCatalog {
       hook()
       // write sets committed since our read: disjoint -> rebase, else fail
       val winners = listManifests(fs, catDir).filter(_ > base)
-        .flatMap(n => readText(fs, manifestPath(catDir, n)).map(n -> writesOf(_)))
+        .flatMap(n => readManifest(fs, catDir, n).map(n -> writesOf(_)))
       winners.find(_._2.intersect(tableSet).nonEmpty) match {
         case Some((n, ws)) =>
           throw new CatalogConflictException(
@@ -191,16 +158,14 @@ object SnapshotCatalog {
               s"conflicts with manifest $n's ${ws.toSeq.sorted.mkString(",")}")
         case None =>
           val target = listManifests(fs, catDir).lastOption.getOrElse(0L) + 1L
-          val claimed = target == base + 1L && {
-            val body = (s"#writes=${tableSet.toSeq.sorted.mkString(",")}" +:
+          // the claim publishes the manifest WITH its body in one atomic
+          // step: a concurrent finalizePending can never flip the catalog
+          // to a claimed-but-empty manifest
+          val claimed = target == base + 1L && AtomicPut(fs,
+            manifestPath(catDir, target),
+            (s"#writes=${tableSet.toSeq.sorted.mkString(",")}" +:
               newPins.toSeq.sortBy(_._1).map { case (t, v) => s"$t=$v" })
-              .mkString("\n")
-            try {
-              val out = fs.create(manifestPath(catDir, target), false) // the CAS
-              try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-              true
-            } catch { case _: java.io.IOException => false }
-          }
+              .mkString("\n").getBytes(StandardCharsets.UTF_8))
           if (claimed) {
             finalizePending(spark, catDir)
             return CatCommitted(target, rebases)

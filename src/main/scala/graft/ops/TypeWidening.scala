@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets
 
 /** Type widening — Delta's public type-widening design on the `_v-N`
   * layout: a column's LOGICAL type lives in a per-version `_types` manifest;
@@ -89,32 +88,24 @@ object TypeWidening {
   }
 
   private def writeTypes(fs: org.apache.hadoop.fs.FileSystem, vd: Path,
-      types: Seq[(String, DataType)]): Unit = {
-    val out = fs.create(new Path(vd, TypesName), true)
-    try out.write(types.map { case (n, t) => s"$n=${t.catalogString}" }
-      .mkString("\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
+      types: Seq[(String, DataType)]): Unit =
+    VersionedTable.writeText(fs, new Path(vd, TypesName),
+      types.map { case (n, t) => s"$n=${t.catalogString}" }.mkString("\n"))
 
-  private def writePrev(fs: org.apache.hadoop.fs.FileSystem, vd: Path,
-      prev: Long): Unit = {
-    val out = fs.create(new Path(vd, PrevName), true)
-    try out.write(prev.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def sealCommit(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, next: Long): Unit = {
-    fs.create(new Path(VersionedTable.verDir(dir, next), "_SUCCESS"), true).close()
-    VersionedTable.stampCommitTs(fs, dir, next)
-    VersionedTable.flipPointer(fs, dir, next)
-  }
-
-  private def nextVersion(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String): (Option[Long], Long) = {
-    val cur = VersionedTable.currentVersion(spark, dir)
-    VersionedTable.listVersions(fs, dir).filter(_ > cur.getOrElse(-1L))
-      .foreach(v => fs.delete(VersionedTable.verDir(dir, v), true))
-    (cur, cur.getOrElse(0L) + 1L)
+  /** One version of this plane through the commit kernel: `data` (if any)
+    * stored under `data/`, the `types` manifest, and the `_prev` chain
+    * link (if any). The version root holds no parquet, so the kernel
+    * plants `_SUCCESS`.
+    */
+  private def commitVersion(spark: SparkSession, dir: String,
+      data: Option[DataFrame], types: Seq[(String, DataType)],
+      prev: Option[Long]): Long = {
+    val fs = fsOf(spark, dir)
+    VersionedTable.commit(spark, dir, plantSuccess = true) { vd =>
+      data.foreach(d => VersionedTable.writeParquet(d)(new Path(vd, DataName)))
+      writeTypes(fs, vd, types)
+      prev.foreach(p => VersionedTable.writeText(fs, new Path(vd, PrevName), p.toString))
+    }._1
   }
 
   /** Bootstrap: manifest = the frame's own schema.
@@ -131,18 +122,13 @@ object TypeWidening {
       s"TypeWidening.init($dir): this dir holds a branch-plane table " +
         "(_heads exists) — the epoch-chain layout does not compose with " +
         "the branch plane; keep the typed table on its own path")
-    val (_, next) = nextVersion(spark, fs, dir)
-    val vd = VersionedTable.verDir(dir, next)
-    df.write.mode(SaveMode.Overwrite).parquet(new Path(vd, DataName).toString)
-    writeTypes(fs, vd, df.schema.fields.toSeq.map(f => f.name -> f.dataType))
-    sealCommit(spark, fs, dir, next)
-    next
+    commitVersion(spark, dir, Some(df),
+      df.schema.fields.toSeq.map(f => f.name -> f.dataType), prev = None)
   }
 
   /** ALTER COLUMN TYPE — metadata-only; only widening conversions land. */
   def widen(spark: SparkSession, dir: String, column: String,
       to: DataType): Long = {
-    val fs = fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"TypeWidening.widen($dir): no complete snapshot"))
     val types = typesOf(spark, dir, cur)
@@ -151,14 +137,8 @@ object TypeWidening {
     require(isWidening(from, to),
       s"TypeWidening.widen($dir): ${from.catalogString} -> ${to.catalogString} " +
         "is not a lossless widening — a narrowing would silently truncate history")
-    val (_, next) = nextVersion(spark, fs, dir)
-    val vd = VersionedTable.verDir(dir, next)
-    fs.mkdirs(vd)
-    writeTypes(fs, vd,
-      types.map { case (n, t) => if (n == column) n -> to else n -> t })
-    writePrev(fs, vd, cur)
-    sealCommit(spark, fs, dir, next)
-    next
+    commitVersion(spark, dir, data = None,
+      types.map { case (n, t) => if (n == column) n -> to else n -> t }, Some(cur))
   }
 
   /** Append rows: new files only, stored AT the live manifest types (the
@@ -167,7 +147,6 @@ object TypeWidening {
     */
   def append(df: DataFrame, dir: String): Long = {
     val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"TypeWidening.append($dir): no complete snapshot — use init"))
     val types = typesOf(spark, dir, cur)
@@ -179,13 +158,7 @@ object TypeWidening {
           s"wider than the manifest ${t.catalogString} — widen the table first")
     }
     val stored = df.select(types.map { case (n, t) => col(n).cast(t).as(n) }: _*)
-    val (_, next) = nextVersion(spark, fs, dir)
-    val vd = VersionedTable.verDir(dir, next)
-    stored.write.mode(SaveMode.Overwrite).parquet(new Path(vd, DataName).toString)
-    writeTypes(fs, vd, types)
-    writePrev(fs, vd, cur)
-    sealCommit(spark, fs, dir, next)
-    next
+    commitVersion(spark, dir, Some(stored), types, Some(cur))
   }
 
   /** Whole-snapshot REWRITE at the live manifest types (the commit shape
@@ -198,7 +171,6 @@ object TypeWidening {
     */
   def rewrite(df: DataFrame, dir: String): Long = {
     val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
     val cur = VersionedTable.currentVersion(spark, dir).getOrElse(
       sys.error(s"TypeWidening.rewrite($dir): no complete snapshot"))
     val types = typesOf(spark, dir, cur)
@@ -215,12 +187,7 @@ object TypeWidening {
           s"wider than the manifest ${t.catalogString} — widen the table first")
     }
     val stored = df.select(types.map { case (n, t) => col(n).cast(t).as(n) }: _*)
-    val (_, next) = nextVersion(spark, fs, dir)
-    val vd = VersionedTable.verDir(dir, next)
-    stored.write.mode(SaveMode.Overwrite).parquet(new Path(vd, DataName).toString)
-    writeTypes(fs, vd, types)
-    sealCommit(spark, fs, dir, next)
-    next
+    commitVersion(spark, dir, Some(stored), types, prev = None)
   }
 
   /** The sidecars a STAGED rewrite dir needs before its OCC claim: the

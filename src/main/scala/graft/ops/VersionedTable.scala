@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import java.nio.charset.StandardCharsets
 
 /** Versioned whole-table snapshots with an atomic pointer flip — the
@@ -19,12 +19,17 @@ import java.nio.charset.StandardCharsets
   *   dir/_v-00000041/    # previous version, kept until gc
   * }}}
   *
-  * Write protocol: stage the FULL new snapshot to `_v-(N+1)` (the parquet
-  * committer plants `_SUCCESS` last), then flip `_ptr`. A crash before the
-  * flip leaves a dangling higher version that the next write sweeps; a crash
+  * Write protocol: every commit goes through ONE kernel ([[commit]]; the
+  * write-audit-publish pair [[stage]]/[[publish]] is the same kernel split
+  * at the flip, and [[Occ]] reuses its seal/stamp/flip tail after its
+  * rename). It stages the FULL new snapshot to `_v-(N+1)` (the parquet
+  * committer plants `_SUCCESS` last), carries the live `_txn-*` markers
+  * forward, stamps `_commit_ts`, then flips `_ptr`. A crash before the flip
+  * leaves a dangling higher version that the next commit sweeps; a crash
   * during the flip is covered by the reader fallback (highest version with
   * `_SUCCESS`). Readers resolve the pointer and read ONE immutable dir —
-  * concurrent with any number of writes.
+  * concurrent with any number of writes. Nothing outside this object
+  * writes the pointer, the stamp or the markers.
   *
   * Single-writer by design (the daily pipeline's dims/snapshots have exactly
   * one writer); concurrent writers would race the pointer and need a
@@ -55,14 +60,12 @@ object VersionedTable {
     * highest-version-with-ts<=t rule could pick a later version while
     * skipping an earlier one whose stamp is larger.
     */
-  private[ops] def stampCommitTs(fs: FileSystem, dir: String, version: Long): Unit = {
-    val vd = verDir(dir, version)
+  private def stampCommitTs(fs: FileSystem, dir: String, version: Long): Unit = {
     val prev = listVersions(fs, dir).filter(_ < version).lastOption
       .flatMap(v => readText(fs, new Path(verDir(dir, v), CommitTsName)))
       .flatMap(_.trim.toLongOption)
     val ts = math.max(prev.map(_ + 1L).getOrElse(Long.MinValue), System.currentTimeMillis)
-    val out = fs.create(new Path(vd, CommitTsName), true)
-    try out.write(ts.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    writeText(fs, new Path(verDir(dir, version), CommitTsName), ts.toString)
   }
 
   /** The version's commit timestamp (ms). Absent on versions written
@@ -112,12 +115,15 @@ object VersionedTable {
 
   private[graft] def listVersions(fs: FileSystem, dir: String): Seq[Long] = {
     val d = new Path(dir)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(VerPrefix))
-      .flatMap(st => st.getPath.getName.stripPrefix(VerPrefix).toLongOption)
-      .sorted
+    if (!fs.exists(d)) Seq.empty else versionsIn(fs.listStatus(d).toSeq)
   }
+
+  private def versionsIn(children: Seq[FileStatus]): Seq[Long] =
+    children.filter(_.isDirectory).flatMap(st => numbered(st.getPath, VerPrefix)).sorted
+
+  /** `N` of a `<prefix>N` name, if it is one. */
+  private[ops] def numbered(p: Path, prefix: String): Option[Long] =
+    Some(p.getName).filter(_.startsWith(prefix)).flatMap(_.stripPrefix(prefix).toLongOption)
 
   /** Read a small text file to EOF: a single read() may legally return a
     * SHORT read on object-store filesystems, and a truncated "00" would
@@ -135,6 +141,12 @@ object VersionedTable {
         Some(new String(buf.toByteArray, StandardCharsets.UTF_8))
       } finally in.close()
     }
+
+  /** Write a small text file, replacing any previous one. */
+  private[ops] def writeText(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
 
   private[graft] def readPtr(fs: FileSystem, dir: String): Option[Long] =
     readText(fs, new Path(dir, PtrName)).flatMap(_.trim.toLongOption)
@@ -154,8 +166,10 @@ object VersionedTable {
         readText(fs, st.getPath).flatMap(_.trim.toLongOption).map(app -> _)
       }.toMap
 
+  private val SuccessName = "_SUCCESS"
+
   private[graft] def complete(fs: FileSystem, vd: Path): Boolean =
-    fs.exists(new Path(vd, "_SUCCESS"))
+    fs.exists(new Path(vd, SuccessName))
 
   /** The live version: the pointer if it names a complete snapshot, else the
     * highest complete version on disk (covers a crash mid-pointer-flip —
@@ -238,46 +252,117 @@ object VersionedTable {
     * stats admit the predicate.
     */
   def write(df: DataFrame, dir: String, txn: Map[String, Long] = Map.empty,
-      statsCols: Seq[String] = Nil): Long = {
-    val spark = df.sparkSession
+      statsCols: Seq[String] = Nil): Long =
+    commit(df.sparkSession, dir, txn, statsCols)(writeParquet(df))._1
+
+  private[ops] def writeParquet(df: DataFrame)(vd: Path): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(vd.toString)
+
+  /** THE commit kernel — the only way a `_v-N` version goes live:
+    *  1. pick `live + 1`, sweeping the dangling dirs above the live version
+    *     (crashed commits that never flipped);
+    *  2. `fill` populates the version dir — a parquet write, byte carries,
+    *     or sidecar files only — and its result is returned alongside the
+    *     version;
+    *  3. seal: the parquet committer's `_SUCCESS` must be there, or, when
+    *     `plantSuccess` (fills that write no parquet at the version root),
+    *     the kernel creates it; `statsCols` builds the [[DataSkipping]]
+    *     index;
+    *  4. carry the live `_txn-*` map forward with `txn` on top (so a
+    *     compaction, delete or feature commit never drops an exactly-once
+    *     marker), stamp `_commit_ts`, flip `_ptr`, refresh Spark's cache.
+    * The carry and stamp land BEFORE the flip: a version reachable through
+    * the mid-flip reader fallback always carries its full txn map, and a
+    * crash before the flip leaves the pointer intact (the next commit
+    * sweeps the dir, and its re-applied batch is then the FIRST
+    * application).
+    */
+  private[graft] def commit[A](spark: SparkSession, dir: String,
+      txn: Map[String, Long] = Map.empty, statsCols: Seq[String] = Nil,
+      plantSuccess: Boolean = false)(fill: Path => A): (Long, A) = {
     val fs = fsOf(spark, dir)
     val cur = currentVersion(spark, dir)
-    // sweep dangling versions above the pointer — crashed writes that never
-    // flipped (or half-written stage dirs without _SUCCESS)
-    listVersions(fs, dir).filter(v => v > cur.getOrElse(-1L))
-      .foreach(v => fs.delete(verDir(dir, v), true))
+    val (next, out) = prepare(spark, fs, dir, cur, statsCols, plantSuccess)(fill)
+    land(spark, fs, dir, cur, next, txn)
+    (next, out)
+  }
+
+  /** Kernel steps 1–3: the version dir, filled and sealed, NOT yet live. */
+  private def prepare[A](spark: SparkSession, fs: FileSystem, dir: String,
+      cur: Option[Long], statsCols: Seq[String], plantSuccess: Boolean)
+      (fill: Path => A): (Long, A) = {
+    sweep(fs, dir, cur)
     val next = cur.getOrElse(0L) + 1L
     val vd = verDir(dir, next)
-    df.write.mode(SaveMode.Overwrite).parquet(vd.toString)
-    require(complete(fs, vd), s"stage $vd missing _SUCCESS after write")
+    val out = fill(vd)
+    if (plantSuccess) fs.create(new Path(vd, SuccessName), true).close()
+    else require(complete(fs, vd), s"stage $vd missing $SuccessName after write")
     if (statsCols.nonEmpty) DataSkipping.writeStats(spark, vd.toString, statsCols)
-    // transaction markers: carry the live version's map forward (so gc of
-    // old versions never loses the last-applied batchId) and overlay this
-    // write's own txn. Written BEFORE the flip: a version reachable via the
-    // mid-flip reader fallback always carries its full txn map, and a crash
-    // right here leaves the pointer intact (this dangling dir is swept by
-    // the next write, whose re-applied batch is then the FIRST application).
-    val carried = cur.map(v => readTxnMap(fs, verDir(dir, v))).getOrElse(Map.empty)
-    (carried ++ txn).foreach { case (app, batch) =>
-      val out = fs.create(new Path(vd, TxnPrefix + app), true)
-      try out.write(batch.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    (next, out)
+  }
+
+  /** Delete the version dirs above the live one — crashed single-writer
+    * commits, unpublished stages. An [[Occ]] `_commit-` marker above the
+    * live version claims its dir as a DURABLE commit awaiting roll-forward:
+    * that is never debris, and a single-writer commit on top of it would
+    * fork history, so the kernel refuses instead. One listing serves both
+    * checks.
+    */
+  private def sweep(fs: FileSystem, dir: String, live: Option[Long]): Unit = {
+    val d = new Path(dir)
+    if (fs.exists(d)) {
+      val children = fs.listStatus(d).toSeq
+      val pending = children.flatMap(st => numbered(st.getPath, Occ.CommitPrefix))
+        .filter(_ > live.getOrElse(0L))
+      require(pending.isEmpty, s"VersionedTable($dir): Occ commit(s) " +
+        s"${pending.sorted.mkString(",")} are claimed but not yet live — " +
+        "roll them forward (Occ.finalizePending) before committing")
+      versionsIn(children).filter(_ > live.getOrElse(-1L))
+        .foreach(v => fs.delete(verDir(dir, v), true))
     }
-    stampCommitTs(fs, dir, next)
-    flipPointer(fs, dir, next)
-    spark.catalog.refreshByPath(vd.toString)
-    next
+  }
+
+  /** Kernel step 4: seal, flip, refresh. */
+  private def land(spark: SparkSession, fs: FileSystem, dir: String,
+      live: Option[Long], v: Long, txn: Map[String, Long]): Unit = {
+    carryAndStamp(fs, dir, live, v, txn)
+    flipPointer(fs, dir, v)
+    spark.catalog.refreshByPath(verDir(dir, v).toString)
+  }
+
+  private def carryAndStamp(fs: FileSystem, dir: String, live: Option[Long],
+      v: Long, txn: Map[String, Long]): Unit = {
+    (live.map(l => readTxnMap(fs, verDir(dir, l))).getOrElse(Map.empty) ++ txn)
+      .foreach { case (app, batch) =>
+        writeText(fs, new Path(verDir(dir, v), TxnPrefix + app), batch.toString)
+      }
+    stampCommitTs(fs, dir, v)
+  }
+
+  /** [[Occ]]'s roll-forward of claimed version `v` after its rename: the
+    * kernel's carry → stamp → flip tail, each step idempotent so any number
+    * of concurrent finalizers converge. The carry and stamp run once (a
+    * stamped version is sealed; a crash between carry and stamp re-writes
+    * identical markers), and the pointer only ever moves forward.
+    */
+  private[ops] def rollForward(fs: FileSystem, dir: String, v: Long): Unit = {
+    require(complete(fs, verDir(dir, v)),
+      s"VersionedTable.rollForward($dir): commit $v has no complete version dir")
+    if (!hasCommitTs(fs, dir, v))
+      carryAndStamp(fs, dir, readPtr(fs, dir), v, Map.empty)
+    if (!readPtr(fs, dir).exists(_ >= v)) flipPointer(fs, dir, v)
   }
 
   /** Pointer flip: stage + delete + rename (rename-over-existing is not
     * portable across Hadoop filesystems). The instant with no pointer file
     * is covered by the reader fallback to the highest complete version —
-    * which IS `next` at that point.
+    * which IS `next` at that point. Shared with [[SnapshotCatalog]]'s
+    * manifest pointer.
     */
   private[ops] def flipPointer(fs: FileSystem, dir: String, next: Long): Unit = {
     val ptr = new Path(dir, PtrName)
     val ptrTmp = new Path(dir, s".$PtrName.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(ptrTmp, true)
-    try out.write(f"$next%08d".getBytes(StandardCharsets.UTF_8)) finally out.close()
+    writeText(fs, ptrTmp, f"$next%08d")
     if (fs.exists(ptr)) fs.delete(ptr, false)
     if (!fs.rename(ptrTmp, ptr))
       throw new java.io.IOException(s"pointer flip failed: $ptrTmp -> $ptr")
@@ -288,29 +373,20 @@ object VersionedTable {
     * version; the staged dir is addressable (for audit queries) via
     * [[stagedDir]]. An unpublished stage is exactly a crashed write —
     * any later write (or [[abortStaged]]) sweeps it, so a failed audit
-    * needs no cleanup transaction. This is Iceberg's WAP pattern on the
-    * same pointer protocol the normal write uses.
+    * needs no cleanup transaction. This is Iceberg's WAP pattern: the
+    * kernel split at the flip.
     */
   def stage(df: DataFrame, dir: String, statsCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
-    val cur = currentVersion(spark, dir)
-    listVersions(fs, dir).filter(v => v > cur.getOrElse(-1L))
-      .foreach(v => fs.delete(verDir(dir, v), true))
-    val next = cur.getOrElse(0L) + 1L
-    val vd = verDir(dir, next)
-    df.write.mode(SaveMode.Overwrite).parquet(vd.toString)
-    require(complete(fs, vd), s"stage $vd missing _SUCCESS after write")
-    if (statsCols.nonEmpty) DataSkipping.writeStats(spark, vd.toString, statsCols)
-    next
+    prepare(spark, fsOf(spark, dir), dir, currentVersion(spark, dir), statsCols,
+      plantSuccess = false)(writeParquet(df))._1
   }
 
   /** The staged (not yet live) version's data dir, for audit reads. */
   def stagedDir(dir: String, version: Long): String = verDir(dir, version).toString
 
-  /** Publish a staged version: carry the live txn map forward (overlaid
-    * with `txn`, written BEFORE the flip — same ordering contract as
-    * [[write]]), then flip. Fails fast if the staged snapshot is
+  /** Publish a staged version: the kernel's carry → stamp → flip tail
+    * (`txn` laid over the live map). Fails fast if the staged snapshot is
     * missing/incomplete or is not the next version after the live one.
     */
   def publish(spark: SparkSession, dir: String, version: Long,
@@ -329,14 +405,7 @@ object VersionedTable {
         .filter(v => v != version && complete(fs, verDir(dir, v))).lastOption)
     require(version == cur.getOrElse(0L) + 1L,
       s"publish: staged $version is not the successor of live $cur")
-    (cur.map(v => readTxnMap(fs, verDir(dir, v))).getOrElse(Map.empty) ++ txn)
-      .foreach { case (app, batch) =>
-        val out = fs.create(new Path(vd, TxnPrefix + app), true)
-        try out.write(batch.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
-      }
-    stampCommitTs(fs, dir, version)
-    flipPointer(fs, dir, version)
-    spark.catalog.refreshByPath(vd.toString)
+    land(spark, fs, dir, cur, version, txn)
   }
 
   /** Abort a staged version: delete its dir (a no-op if already swept).
@@ -374,40 +443,36 @@ object VersionedTable {
     val live = verDir(dir, cur)
     val (affected, total) = DataSkipping.selectFiles(spark, live.toString, c, lo, hi)
     if (affected.isEmpty) return (cur, 0, total.toInt) // provably nothing to delete
-    listVersions(fs, dir).filter(_ > cur).foreach(v => fs.delete(verDir(dir, v), true))
-    val next = cur + 1L
-    val vd = verDir(dir, next)
     val affectedNames = affected.map(p => new Path(p).getName).toSet
-    // rewrite ONLY the affected files (their committer plants _SUCCESS)
-    spark.read.parquet(affected.toIndexedSeq: _*)
-      .filter(col(c).isNull || col(c) < lo || col(c) > hi)
-      .write.mode(SaveMode.Overwrite).parquet(vd.toString)
-    // carry the untouched files in as raw byte copies — bounded-parallel:
-    // the carries are independent, and at 100 TB the carry set is nearly
-    // the whole table (a surgical delete rewrites a handful of band files)
-    val carrySrc = fs.listStatus(live)
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".") && !affectedNames(st.getPath.getName))
-      .toSeq
-    graft.ParallelActions.mapOrdered(carrySrc) { st =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-        new Path(vd, st.getPath.getName), false,
-        spark.sparkContext.hadoopConfiguration)
+    val (next, _) = commit(spark, dir, statsCols = statsCols) { vd =>
+      // rewrite ONLY the affected files (their committer plants _SUCCESS)
+      writeParquet(spark.read.parquet(affected.toIndexedSeq: _*)
+        .filter(col(c).isNull || col(c) < lo || col(c) > hi))(vd)
+      // carry the untouched files — at 100 TB nearly the whole table (a
+      // surgical delete rewrites a handful of band files)
+      carry(spark, dataFiles(fs, live).filterNot(st => affectedNames(st.getPath.getName)), vd)
     }
-    require(complete(fs, vd), s"stage $vd missing _SUCCESS after delete rewrite")
-    if (statsCols.nonEmpty) DataSkipping.writeStats(spark, vd.toString, statsCols)
-    // txn carry (same rule as write: a live version always has its map)
-    readTxnMap(fs, live).foreach { case (app, batch) =>
-      val out = fs.create(new Path(vd, TxnPrefix + app), true)
-      try out.write(batch.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    }
-    // stamped like every other commit path: without this, readAsOf for any
-    // instant after the delete would resolve to the PRE-delete snapshot and
-    // resurrect the compliance-deleted rows
-    stampCommitTs(fs, dir, next)
-    flipPointer(fs, dir, next)
-    spark.catalog.refreshByPath(vd.toString)
     (next, affected.length, total.toInt)
+  }
+
+  /** The visible data files directly under `vd` (no `_`/`.` sidecars). */
+  private[ops] def dataFiles(fs: FileSystem, vd: Path): Seq[FileStatus] =
+    fs.listStatus(vd).toSeq.filter(st => st.isFile &&
+      !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+
+  /** Carry files or dirs into `into` as raw byte copies, never re-encoded
+    * (a metadata-only add in a log-based format). The copies are
+    * independent, so a bounded pool keeps the carry flat in their count.
+    */
+  private[ops] def carry(spark: SparkSession, srcs: Seq[FileStatus],
+      into: Path): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = into.getFileSystem(conf)
+    graft.ParallelActions.mapOrdered(srcs) { st =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
+        new Path(into, st.getPath.getName), false, conf)
+    }
+    ()
   }
 
   /** Highest batchId the given streaming app has committed to this table
@@ -453,7 +518,14 @@ object VersionedTable {
     * window. Incomplete dirs at or below the pointer are swept outright
     * (dangling ones ABOVE the pointer are the next write's to sweep).
     */
-  def gc(spark: SparkSession, dir: String, keep: Int = 2): Int = {
+  def gc(spark: SparkSession, dir: String, keep: Int = 2): Int =
+    gcPinning(spark, dir, keep)(_ => Set.empty)
+
+  /** [[gc]] that also spares every version `pinned` maps the kept window
+    * to — the versions whose files the kept ones still reference.
+    */
+  private[ops] def gcPinning(spark: SparkSession, dir: String, keep: Int)
+      (pinned: Set[Long] => Set[Long]): Int = {
     require(keep >= 1, "gc must keep at least the live version")
     val fs = fsOf(spark, dir)
     currentVersion(spark, dir) match {
@@ -461,7 +533,9 @@ object VersionedTable {
       case Some(live) =>
         val (done, torn) = listVersions(fs, dir).filter(_ <= live)
           .partition(v => complete(fs, verDir(dir, v)))
-        val victims = done.dropRight(keep) ++ torn
+        val kept = done.takeRight(keep).toSet
+        val spared = kept ++ pinned(kept)
+        val victims = done.filterNot(spared) ++ torn
         victims.foreach(v => fs.delete(verDir(dir, v), true))
         victims.length
     }

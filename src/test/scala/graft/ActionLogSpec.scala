@@ -75,4 +75,20 @@ class ActionLogSpec extends AnyFunSuite {
     val (files, _, ckpt) = ActionLog.resolve(spark, dir, 3L)
     assert(ckpt.contains(2L) && files.size == 1)
   }
+
+  test("an all-NULL stats band commits stats-less and range reads admit it") {
+    val dir = TestSpark.tmpDir("al5")
+    ActionLog.append(df(1L, 2L, 3L).coalesce(1), dir, statsCol = Some("k"))
+    val band = Seq(Option.empty[Long], None).toDF("k").coalesce(1)
+    val v = ActionLog.append(band, dir, statsCol = Some("k"))
+    assert(ActionLog.resolve(spark, dir, v)._1.size == 2)
+    // the band's rows are live, NULL keys and all
+    assert(ActionLog.read(spark, dir).count() == 5L)
+    // pruning keeps the stats-less file (conservative) and the residual
+    // predicate still answers exactly
+    val (hit, kept, total) = ActionLog.readWhere(spark, dir, "k", 2L, 3L)
+    assert(kept == 2 && total == 2)
+    assert(hit.as[Long].collect().sorted.toSeq == Seq(2L, 3L))
+    assert(ActionLog.rowCountFromLog(spark, dir).isEmpty)
+  }
 }

@@ -110,6 +110,8 @@ class OccSpec extends AnyFunSuite {
     val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_commit-00000002"), false)
     out.write(s"$stageName\nlo".getBytes("UTF-8")); out.close()
     assert(VersionedTable.currentVersion(spark, dir).contains(1L), "not yet visible")
+    // a single-writer commit must not build version 2 over the claimed one
+    intercept[IllegalArgumentException](VersionedTable.write(live(dir), dir))
     Occ.finalizePending(spark, dir)
     assert(VersionedTable.currentVersion(spark, dir).contains(2L))
     assert(tagOf(dir, 5) == "A")
@@ -144,6 +146,22 @@ class OccSpec extends AnyFunSuite {
     val ptr = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
     assert(ptr.toLong == 2L)
     assert(tagOf(dir, 5) == "A")
+  }
+
+  test("gc after commits: final markers are never rolled forward again") {
+    val dir = TestSpark.tmpDir("occ-gc")
+    seed(dir)
+    // a single-writer exactly-once commit on the same table: its txn
+    // marker must ride every later Occ commit
+    VersionedTable.writeCommitted(live(dir), dir, "app", 0L)
+    Occ.commit(spark, dir, Set("lo"))(mutateRange(1, 10, "A"))
+    Occ.commit(spark, dir, Set("hi"))(mutateRange(90, 100, "B"))
+    // versions 1 and 2 go; the markers of commits 1, 3 and 4 stay behind
+    assert(VersionedTable.gc(spark, dir, keep = 2) == 2)
+    val c = Occ.commit(spark, dir, Set("mid"))(mutateRange(40, 60, "C"))
+    assert(c.version == 5L)
+    assert(tagOf(dir, 5) == "A" && tagOf(dir, 95) == "B" && tagOf(dir, 50) == "C")
+    assert(VersionedTable.lastBatchId(spark, dir, "app").contains(0L))
   }
 
   test("capture under rebase: the loser's feed is recomputed against the winner's snapshot") {

@@ -112,17 +112,33 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.writeCommitted(Seq((9L, "dup")).toDF("k", "v"), dir, "app", 1L).isEmpty)
     assert(VersionedTable.writeCommitted(Seq((9L, "dup")).toDF("k", "v"), dir, "app", 0L).isEmpty)
     assert(VersionedTable.currentVersion(spark, dir) === Some(2L))
-    // a plain (non-streaming) write — compaction, backfill — carries the txn
-    // map forward, and gc of old versions cannot lose it
-    VersionedTable.write(Seq((3L, "compacted")).toDF("k", "v"), dir)
-    VersionedTable.gc(spark, dir, keep = 1)
-    assert(VersionedTable.lastBatchId(spark, dir, "app") === Some(1L))
-    assert(VersionedTable.writeCommitted(Seq((9L, "dup")).toDF("k", "v"), dir, "app", 1L).isEmpty)
+    // every non-streaming commit path carries the txn map forward — a plain
+    // write (compaction, backfill), a surgical delete, a bin-pack OPTIMIZE —
+    // and gc of old versions cannot lose it
+    import org.apache.spark.sql.functions.{col, lit}
+    val commits: Seq[(String, () => Any)] = Seq(
+      "write" -> (() => VersionedTable.write(
+        Seq((3L, "x"), (4L, "y"), (40L, "z")).toDF("k", "v").repartitionByRange(2, col("k")),
+        dir, statsCols = Seq("k"))),
+      "deleteRange" -> (() =>
+        VersionedTable.deleteRange(spark, dir, "k", lit(4L), lit(4L), statsCols = Seq("k"))),
+      "binPackVersioned" -> (() => graft.ops.Layout.binPackVersioned(spark, dir,
+        smallBytes = 1L << 20)))
+    commits.zipWithIndex.foreach { case ((name, run), i) =>
+      run()
+      assert(VersionedTable.currentVersion(spark, dir) === Some(3L + i), s"$name committed")
+      VersionedTable.gc(spark, dir, keep = 1)
+      assert(VersionedTable.lastBatchId(spark, dir, "app") === Some(1L), s"after $name")
+      assert(VersionedTable.writeCommitted(Seq((9L, "dup")).toDF("k", "v"), dir, "app", 1L)
+        .isEmpty, s"replay after $name")
+    }
+    assert(VersionedTable.read(spark, dir).as[(Long, String)].collect().sorted
+      === Array((3L, "x"), (40L, "z")))
     assert(VersionedTable.writeCommitted(Seq((4L, "c")).toDF("k", "v"), dir, "app", 2L)
-      === Some(4L))
+      === Some(6L))
     // per-app isolation: another app's batch 0 is fresh
     assert(VersionedTable.writeCommitted(Seq((5L, "d")).toDF("k", "v"), dir, "other", 0L)
-      === Some(5L))
+      === Some(7L))
   }
 
   test("writeCommitted: crash after staging (txn written, pointer unflipped) re-applies ONCE") {
