@@ -18,9 +18,11 @@ import org.apache.hadoop.fs.Path
   *    broadcast-sized — a daily increment almost always is, so Spark picks a
   *    broadcast anti join and the TB-sized target never shuffles.
   *  - With a date-partitioned target and a single-date source, callers should
-  *    pre-filter the target to the affected partitions (partition pruning) and
-  *    rewrite only those — see [[EodPipelineSpec]] usage; rewriting 1 partition
-  *    of 3650 is what makes the daily run O(day) instead of O(history).
+  *    read and rewrite only the affected partition — see
+  *    `EodPipeline.upsertDatePartition`. Read the partition directory itself,
+  *    not the table root with a date filter: Spark prunes partitions only
+  *    after listing every one of them. Rewriting 1 partition of 3650 is what
+  *    makes the daily run O(day) instead of O(history).
   */
 object Upsert {
 

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model.Schemas
 import graft.ops._
 import graft.source.EodSource
@@ -27,10 +29,11 @@ final case class PipelineReport(
   * FACT (dims join + MERGE) → reconciliation metrics.
   *
   * Storage layout: warehouse-rooted parquet, RAW/CORE/FACT hive-partitioned
-  * by `trade_date` so the reference's ubiquitous date-equality predicate
-  * (merge_core.sql:12 etc.) is partition pruning, and the daily MERGE
-  * rewrites exactly one partition — O(day), not O(history). At 100 TB that
-  * partition discipline *is* the pipeline's scalability story.
+  * by `trade_date`; the reference's date-equality predicate (merge_core.sql:12
+  * etc.) is a read of that day's partition directory, so a daily run lists,
+  * reads and rewrites one partition per table — O(day), not O(history). (A
+  * filter on the table root would list every partition before pruning.) At
+  * 100 TB that partition discipline *is* the pipeline's scalability story.
   */
 final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
 
@@ -48,41 +51,42 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
   def dimDate(spark: SparkSession): DataFrame =
     VersionedTable.read(spark, dimDatePath)
 
-  private def readIfExists(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  /** One day's partition, listed and read alone (`basePath` keeps
+    * `trade_date` a column); empty when absent. Heals first: a crash between
+    * snapshotWrite's renames leaves the partition absent, its old copy intact.
+    */
+  private def readDay(spark: SparkSession, table: String, tradeDate: String,
+      schema: StructType): DataFrame = {
+    val p = new Path(s"$table/trade_date=$tradeDate")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a writer crash between snapshotWrite's two renames leaves `path` absent
-    // with its retired sibling complete — heal before deciding "empty"
     Upsert.recoverSnapshot(fs, p)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (fs.exists(p)) spark.read.schema(schema).option("basePath", table).parquet(p.toString)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 
   /** Single-date partition upsert: read only the affected partition, merge,
     * swap that partition's directory. The rest of the table is untouched
-    * (never read, never rewritten).
+    * (never listed, read or rewritten). `source` carries the table's schema.
     */
   private def upsertDatePartition(spark: SparkSession, tablePath: String,
       tradeDate: String, source: DataFrame, keys: Seq[String]): Unit = {
-    val partPath = s"$tablePath/trade_date=$tradeDate"
-    val src = source.drop("trade_date")
-    val p = new org.apache.hadoop.fs.Path(partPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Upsert.recoverSnapshot(fs, p) // heal a crash between a prior swap's renames
-    val merged =
-      if (!fs.exists(p)) src
-      else Upsert.merge(spark.read.schema(src.schema).parquet(partPath), src, keys)
-    Upsert.snapshotWrite(merged, partPath)
+    val target = readDay(spark, tablePath, tradeDate, source.schema).drop("trade_date")
+    Upsert.snapshotWrite(Upsert.merge(target, source.drop("trade_date"), keys),
+      s"$tablePath/trade_date=$tradeDate")
   }
 
   /** Stage 2-3 of the lifecycle: bronze CSV for one date → RAW append with
     * the V1 row-count gate evaluated by `observe` ON the write pass (one
-    * scan, not two). A failing gate compensates by deleting the partition
-    * just written — at scale the saved re-read of the bronze batch outweighs
-    * the rare rollback delete.
+    * scan, not two). A failing gate compensates by deleting the files the
+    * write added, keeping earlier loads of the date — at scale the saved
+    * re-read of the bronze batch outweighs the rare rollback delete.
     */
   def loadRaw(spark: SparkSession, bronzeCsv: String, tradeDate: String): Long = {
+    val part = new Path(s"$rawPath/trade_date=$tradeDate")
+    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(): Set[String] =
+      if (fs.exists(part)) fs.listStatus(part).map(_.getPath.getName).toSet else Set.empty
+    val before = files()
     val obs = org.apache.spark.sql.Observation(s"v1-gate-$tradeDate")
     val bronze = EodSource.readBronzeCsv(spark, bronzeCsv)
       .withColumn("trade_date", to_date(lit(tradeDate)))
@@ -90,9 +94,8 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     bronze.write.mode(SaveMode.Append).partitionBy("trade_date").parquet(rawPath)
     val n = obs.get("rows").asInstanceOf[Long]
     if (n < minTickers) { // V1 (eod_data_downloader.py:138-145), compensating
-      val p = new org.apache.hadoop.fs.Path(s"$rawPath/trade_date=$tradeDate")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+      (files() -- before).foreach(f => fs.delete(new Path(part, f), false))
+      if (before.isEmpty) fs.delete(part, true)
       throw new IllegalArgumentException(
         s"bronze $tradeDate: expected >= $minTickers rows, got $n")
     }
@@ -104,7 +107,7 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     * (eod_data_downloader.py:134-136, get_securities_data.py:109-112).
     */
   private def hasData(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && Quality.nonEmpty(EodSource.readBronzeCsv(spark, path))
   }
@@ -181,17 +184,14 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     */
   def runDate(spark: SparkSession, bronzeCsv: String, tradeDate: String): PipelineReport = {
     val rawRows = loadRaw(spark, bronzeCsv, tradeDate)
-    val d = to_date(lit(tradeDate))
 
     // CORE: incremental slice of RAW → normalize → dedup-latest → MERGE.
-    val raw = spark.read.schema(Schemas.raw).parquet(rawPath)
-      .filter(col("trade_date") === d) // partition pruning at scale
+    val raw = readDay(spark, rawPath, tradeDate, Schemas.raw)
       .withColumn("symbol", Normalize.normKey(col("symbol")))
     val deduped = Dedup.latestBy(raw,
       Seq(col("symbol"), col("trade_date")),
       Seq(col("_ingest_ts"), col("_src_file")))
-    val coreExisting = readIfExists(spark, corePath, Schemas.core)
-      .filter(col("trade_date") === d)
+    val coreExisting = readDay(spark, corePath, tradeDate, Schemas.core)
     val premerge = Quality.premergeMetrics(
       raw.select(col("symbol"), col("trade_date")),
       coreExisting.select(col("symbol"), col("trade_date")),
@@ -206,9 +206,9 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     // version dir, which is IMMUTABLE — the write lands in the next version
     // and readers never see a missing or partial dim even if this run dies
     // mid-write (the reference gets this from Snowflake's transactional
-    // MERGE, merge_dim_security.sql / merge_dim_date.sql).
-    val core = spark.read.schema(Schemas.core).parquet(corePath)
-    val coreDay = core.filter(col("trade_date") === d)
+    // MERGE, merge_dim_security.sql / merge_dim_date.sql). One file per dim
+    // version: each day's union would otherwise add a file to every read.
+    val coreDay = readDay(spark, corePath, tradeDate, Schemas.core)
     val dimSec0 = VersionedTable.readOrEmpty(spark, dimSecurityPath, Schemas.dimSecurity)
     val newSyms = coreDay.select(col("symbol")).distinct()
       .join(dimSec0, Seq("symbol"), "left_anti")
@@ -216,13 +216,13 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
       SurrogateKeys.assign(newSyms, "security_id",
           SurrogateKeys.maxKey(dimSec0, "security_id"), Seq("symbol"))
         .select(col("security_id"), col("symbol")))
-    VersionedTable.write(dimSec, dimSecurityPath)
+    VersionedTable.write(dimSec.coalesce(1), dimSecurityPath)
     VersionedTable.gc(spark, dimSecurityPath)
 
     val dimDate0 = VersionedTable.readOrEmpty(spark, dimDatePath, Schemas.dimDate)
     val newDates = DateDim.fromDates(coreDay, col("trade_date"))
       .join(dimDate0.select(col("date_sk")), Seq("date_sk"), "left_anti")
-    VersionedTable.write(dimDate0.unionByName(newDates), dimDatePath)
+    VersionedTable.write(dimDate0.unionByName(newDates).coalesce(1), dimDatePath)
     VersionedTable.gc(spark, dimDatePath)
 
     // FACT: dims are broadcast-sized; join through surrogate keys.
@@ -234,11 +234,8 @@ final class EodPipeline(warehouse: String, minTickers: Long = 100L) {
     upsertDatePartition(spark, factPath, tradeDate, factBatch, Seq("security_id", "date_sk"))
 
     // V5 reconciliation for the date.
-    val factDay = spark.read.schema(Schemas.factDailyPrice).parquet(factPath)
-      .filter(col("trade_date") === d)
-    val coreAfter = spark.read.schema(Schemas.core).parquet(corePath)
-      .filter(col("trade_date") === d)
-    val parity = Quality.postmergeParity(coreAfter, factDay).head()
+    val factDay = readDay(spark, factPath, tradeDate, Schemas.factDailyPrice)
+    val parity = Quality.postmergeParity(coreDay, factDay).head()
 
     PipelineReport(tradeDate, rawRows,
       premerge.getAs[Long]("est_inserts"), premerge.getAs[Long]("est_updates"),

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.sql.functions._
 import graft.pipeline.EodPipeline
 
@@ -133,5 +134,56 @@ class EodPipelineSpec extends AnyFunSuite {
       pipe.runDate(spark, tiny, "2026-08-10")
     }
     assert(e.getMessage.contains("expected >= 100"))
+  }
+
+  test("V1 gate on a FORCE reload rolls back only its own RAW files") {
+    val bronze = TestSpark.tmpDir("bronze5")
+    val wh = TestSpark.tmpDir("wh5")
+    val pipe = new EodPipeline(wh, minTickers = 2)
+    def rawDay = spark.read.parquet(s"${pipe.rawPath}/trade_date=2026-08-10")
+    val first = writeCsv(bronze, "2026-08-10", Seq(
+      "2026-08-10,AAPL,189.5,191.2,188.9,190.4,51234567",
+      "2026-08-10,MSFT,421.1,425.0,419.8,424.3,18345678"))
+    assert(pipe.runDate(spark, first, "2026-08-10").rawRows === 2)
+
+    val short = writeCsv(bronze, "2026-08-10-short", Seq(
+      "2026-08-10,AAPL,1,1,1,1,1"))
+    intercept[IllegalArgumentException] { pipe.runDate(spark, short, "2026-08-10") }
+    assert(rawDay.count() === 2, "the earlier load's RAW rows survive the rollback")
+    assert(rawDay.filter($"close" === 1).isEmpty, "the refused load left no rows")
+
+    val revised = writeCsv(bronze, "2026-08-10-b", Seq(
+      "2026-08-10,AAPL,189.5,191.2,188.9,190.9,51234567",
+      "2026-08-10,MSFT,421.1,425.0,419.8,424.8,18345678"))
+    val r = pipe.runDate(spark, revised, "2026-08-10")
+    assert(r.estUpdates === 2 && r.estInserts === 0 && r.rowParity)
+    assert(rawDay.count() === 4, "RAW keeps both accepted loads (append-only lineage)")
+  }
+
+  test("O(day): a run lists only its day's partitions, flat in history") {
+    val bronze = TestSpark.tmpDir("bronze6")
+    val wh = TestSpark.tmpDir("wh6")
+    val pipe = new EodPipeline(wh, minTickers = 1)
+    // threshold 1: listing more than one partition dir becomes a counted job
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      def filesListed(date: String): Long = {
+        val csv = writeCsv(bronze, date, Seq(
+          s"$date,AAPL,189.5,191.2,188.9,190.4,51234567",
+          s"$date,MSFT,421.1,425.0,419.8,424.3,18345678"))
+        HiveCatalogMetrics.reset()
+        pipe.runDate(spark, csv, date)
+        HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+      }
+      filesListed("2026-08-10")
+      val day2 = filesListed("2026-08-11")
+      filesListed("2026-08-12")
+      val day4 = filesListed("2026-08-13")
+      assert(HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount === 0,
+        "no listing job: no read opened a table root")
+      assert(day4 <= day2, s"files listed grew with history: day 2 $day2, day 4 $day4")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
